@@ -17,6 +17,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
 
 from map_reduce_lite_spark.registry import Query, md5_60bit, mrl_lower, sql_md5_60bit
 from map_reduce_lite_spark.relational.tables import load_table
+from map_reduce_lite_spark.session import materialize
 
 # Small fixed stopword lists (public, common words). Order of the dict is
 # the deterministic tie-break order for argmax.
@@ -1204,7 +1205,7 @@ def _jsd_source_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     never a window / global sort) → broadcast-map every token to its
     bucket → per-(source, bucket) exact counts. Factored out so
     `tests/test_plans.py` can pin the plan shape of THIS pipeline —
-    the caller immediately puts it behind a localCheckpoint barrier,
+    the caller immediately puts it behind a checkpoint barrier,
     which hides it from the final query's explain output."""
     d = load_table(spark, sf_dir, "documents")
     fanout = max(spark.sparkContext.defaultParallelism, 8)
@@ -1270,7 +1271,7 @@ def js_divergence_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the non-race. The merge_shards 19.3 s pathology came from an
     # UNCACHED interim subtree feeding 8 broadcast futures, a different
     # shape; it was fixed there by removing that ckpt, not by eagerness.
-    sc_ = _jsd_source_token_counts(spark, sf_dir).localCheckpoint(eager=False)
+    sc_ = materialize(_jsd_source_token_counts(spark, sf_dir), eager=False)
     qc = sc_.groupBy("mtok").agg(F.sum("cs").alias("cq"))
     ns = sc_.groupBy("source").agg(F.sum("cs").alias("ns"))
     nq = sc_.agg(F.sum("cs").alias("nq"))

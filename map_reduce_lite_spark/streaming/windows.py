@@ -395,10 +395,12 @@ def _stage_events(spark: SparkSession, sf_dir: str) -> str:
     CONTENT: the cache key includes a fingerprint of the source file
     sizes+mtimes, so regenerated data under the same path re-stages, and
     the write goes to a unique temp dir atomically renamed into place so
-    concurrent runs can't interleave partial output."""
+    concurrent runs can't interleave partial output. The stage lives
+    under ``tempfile.gettempdir()``, so ``TMPDIR`` moves it."""
     import os
     import re
     import shutil
+    import tempfile
     import uuid
 
     from map_reduce_lite_spark.relational.tables import load_table
@@ -412,7 +414,7 @@ def _stage_events(spark: SparkSession, sf_dir: str) -> str:
         stats = [os.stat(src)]
     fp = f"{sum(s.st_size for s in stats)}_{max(s.st_mtime_ns for s in stats)}"
     tag = re.sub(r"[^A-Za-z0-9]+", "_", sf_dir).strip("_")
-    staged = f"/tmp/mrl_stream_events_{tag}_{fp}"
+    staged = os.path.join(tempfile.gettempdir(), f"mrl_stream_events_{tag}_{fp}")
     if not os.path.exists(os.path.join(staged, "_SUCCESS")):
         # Sweep tmp dirs leaked by crashed prior runs. Age-gated so a
         # LIVE concurrent writer's tmp dir is never pulled out from

@@ -423,3 +423,16 @@ def test_availablenow_checkpoint_no_reprocess(spark, events_parquet, tmp_path):
     run_once()
     second = spark.read.parquet(sink).count()
     assert second == first, (first, second)
+
+
+def test_staged_events_follow_tempdir(spark, tmp_path, monkeypatch):
+    """The streaming queries stage their input under the process temp
+    dir (``TMPDIR``), not a literal /tmp."""
+    import tempfile
+
+    from map_reduce_lite_spark.streaming.windows import _stage_events
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    staged = _stage_events(spark, SF_SMALL)
+    assert staged.startswith(str(tmp_path) + "/")
+    assert (tmp_path / staged.rsplit("/", 1)[1] / "_SUCCESS").exists()
