@@ -1,5 +1,7 @@
-from map_reduce_lite_spark.ops.dedup import DEDUP_QUERIES  # noqa: F401
+# similarity first: building its registry imports pipeline, which imports
+# dedup, which imports similarity's shared vector-pair core at module level
 from map_reduce_lite_spark.ops.similarity import SIMILARITY_QUERIES  # noqa: F401
+from map_reduce_lite_spark.ops.dedup import DEDUP_QUERIES  # noqa: F401
 from map_reduce_lite_spark.ops.text import TEXT_QUERIES  # noqa: F401
 from map_reduce_lite_spark.ops.multimodal import MULTIMODAL_QUERIES  # noqa: F401
 from map_reduce_lite_spark.ops.curation import CURATION_QUERIES  # noqa: F401

@@ -601,11 +601,10 @@ def leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the most expensive stage here) would execute twice."""
     from map_reduce_lite_spark.ops.dedup import (
         embedding_near_dup_pairs,
-        lsh_band_table,
         refine_star_only_ids,
     )
     from map_reduce_lite_spark.ops.graph import connected_components
-    from map_reduce_lite_spark.ops.similarity import EMB_DIM
+    from map_reduce_lite_spark.ops.similarity import EMB_DIM, lsh_band_table
 
     emb = load_table(spark, sf_dir, "embeddings")
     # one banding for BOTH the pair stage and the coverage metric —

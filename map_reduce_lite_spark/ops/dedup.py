@@ -40,6 +40,26 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from map_reduce_lite_spark.registry import Query, md5_60bit, sql_md5_60bit
 from map_reduce_lite_spark.relational.tables import load_table
 from map_reduce_lite_spark.session import materialize
+from map_reduce_lite_spark.ops.similarity import (
+    EMB_DIM,
+    LSH_N_BANDS,
+    LSH_PLANES,
+    _BAND_KEY,
+    _band_rows,
+    _band_self_join,
+    _cos,
+    _hyperplanes,
+    _over_cap,
+    _salted_split,
+    _score_pairs,
+    _spread,
+    _sql_cos,
+    _vec_dim,
+    _vecs,
+    lsh_band_table,
+    refine_hyperplanes,
+    sql_capped_bands_chain,
+)
 
 # MinHash parameters (bands × rows-per-band = num hashes). The module
 # defaults are the DEMO configuration pinned by the DuckDB oracle —
@@ -600,43 +620,14 @@ def simhash_pairs(docs: DataFrame, cap: int = SIMHASH_BUCKET_CAP) -> DataFrame:
     # a checkpoint a wash (A/B 2.62 vs 2.58 s at sf0.1); with the probe
     # it is what keeps the 60-SUM fingerprint agg single-execution.
     bands = materialize(bands, eager=True)
-    # Sizing probe: one scalar job over the materialized band table
-    # (4 rows/doc). When every (band, chunk) bucket is under the cap —
-    # the common case on natural corpora, and the driver fixtures —
-    # n_sub would be 1 and sub ≡ 0 everywhere, so the split machinery
-    # (sizes broadcast + salted pmod + wider join key) is provably an
-    # identity: skip it and run the plain band join (A/B at sf0.1:
-    # 2.6 s vs 3.2 s warm — the cap is free until a bucket engages it).
-    # Results are bit-identical on both branches by construction.
-    max_bucket = (
-        bands.groupBy("band", "chunk")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .agg(F.max("n"))
-        .first()[0]
-    )
-    if max_bucket is not None and max_bucket > cap:
-        # bucket sizes: ≤ 4·32768 rows however big the corpus — broadcast
-        sizes = bands.groupBy("band", "chunk").agg(
-            ((F.count(F.lit(1)) + F.lit(cap - 1)) / F.lit(cap))
-            .cast("long")
-            .alias("n_sub")
-        )
-        sp = bands.join(F.broadcast(sizes), ["band", "chunk"]).withColumn(
-            "sub",
-            F.pmod(
-                md5_60bit(
-                    F.concat_ws(
-                        "|",
-                        F.lit("shb"),
-                        F.col("band").cast("string"),
-                        F.col("doc").cast("string"),
-                    )
-                ),
-                F.col("n_sub"),
-            ),
-        )
-    else:
-        sp = bands.withColumn("sub", F.lit(0).cast("long"))
+    # Sizing probe inside _salted_split: one scalar job over the
+    # materialized band table (4 rows/doc). When every (band, chunk)
+    # bucket is under the cap — the common case on natural corpora, and
+    # the driver fixtures — the split machinery is skipped and the plain
+    # band join runs (A/B at sf0.1: 2.6 s vs 3.2 s warm — the cap is free
+    # until a bucket engages it). Bucket sizes are ≤ 4·32768 rows however
+    # big the corpus, so the engaged branch broadcasts them.
+    sp = _salted_split(bands, ["band", "chunk"], "doc", "shb", cap)
     a, b = sp.alias("a"), sp.alias("b")
     cands = (
         a.join(
@@ -721,56 +712,8 @@ NEAR_DUP_COS = 0.40  # demo threshold; corpus max pairwise cosine is ~0.51
 EMB_BUCKET_CAP = 512  # max members per LSH band bucket before salted split
 
 
-def lsh_band_table(
-    corpus: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int | None = None,
-    n_planes: int = 16,
-    n_bands: int = 4,
-) -> DataFrame:
-    """Materialized (bid, band_id, band_hash) banding of ``corpus`` —
-    the shared first stage of every embedding-LSH consumer. Extracted
-    (r12) so a job needing the table more than once (the pair stage +
-    the star-only coverage metric in leakage_safe_split) projects and
-    checkpoints it exactly once."""
-    from map_reduce_lite_spark.ops.similarity import _hyperplanes, lsh_band_hashes
-
-    if dim is None:
-        dim = corpus.select(F.size(vec_col).alias("d")).first()[0]
-    planes = _hyperplanes(dim, n_planes)
-    return materialize(
-        corpus.select(
-            F.col(id_col).alias("bid"),
-            F.posexplode(lsh_band_hashes(vec_col, planes, n_bands)).alias(
-                "band_id", "band_hash"
-            ),
-        ),
-        eager=True,
-    )
-
-
-def _band_self_join(bands: DataFrame, on: list[str]) -> DataFrame:
-    """Triangular self-join of a band table on its bucket key columns →
-    distinct (keep_id, dup_id) candidate ids. IDS ONLY on the shuffle
-    (8-byte keys); vectors join back after the pair dedup."""
-    return (
-        bands.select(F.col("bid").alias("keep_id"), *on)
-        .join(bands.select(F.col("bid").alias("dup_id"), *on), on)
-        .filter(F.col("keep_id") < F.col("dup_id"))
-        .dropDuplicates(["keep_id", "dup_id"])
-        .select("keep_id", "dup_id")
-    )
-
-
 def _refined_candidate_ids(
-    corpus: DataFrame,
-    bands: DataFrame,
-    id_col: str,
-    vec_col: str,
-    dim: int,
-    cap: int,
-    n_bands: int,
+    corpus: DataFrame, bands: DataFrame, dim: int, cap: int
 ) -> DataFrame:
     """ADAPTIVE RE-BANDING (r11): candidate ids when some band bucket
     exceeds ``cap``, replacing the salted split for consumers that must
@@ -794,31 +737,15 @@ def _refined_candidate_ids(
     disagree on that band's refinement planes fall back on the other
     bands; (b) a barely-above-threshold pair inside a still-oversized
     sub-bucket is detected only via the representative."""
-    from map_reduce_lite_spark.ops.similarity import (
-        lsh_band_hashes,
-        refine_hyperplanes,
-    )
-
-    sizes = bands.groupBy("band_id", "band_hash").agg(
-        F.count(F.lit(1)).alias("n")
-    )
+    sizes = bands.groupBy(*_BAND_KEY).agg(F.count(F.lit(1)).alias("n"))
     # one row per (band, hash) — at most n_bands × 2^(planes/band); tiny
-    sized = bands.join(F.broadcast(sizes), ["band_id", "band_hash"])
+    sized = bands.join(F.broadcast(sizes), _BAND_KEY)
     small_pairs = _band_self_join(
-        sized.filter(F.col("n") <= cap).select("bid", "band_id", "band_hash"),
-        on=["band_id", "band_hash"],
+        sized.filter(F.col("n") <= cap).select("bid", *_BAND_KEY), on=_BAND_KEY
     )
-    rplanes = refine_hyperplanes(dim)
-    rh_tbl = corpus.select(
-        F.col(id_col).alias("bid"),
-        F.posexplode(lsh_band_hashes(vec_col, rplanes, n_bands)).alias(
-            "band_id", "rh"
-        ),
-    )
+    rh_tbl = _band_rows(corpus, refine_hyperplanes(dim), hash_col="rh")
     big = (
-        sized.filter(F.col("n") > cap)
-        .select("bid", "band_id", "band_hash")
-        .join(rh_tbl, ["bid", "band_id"])
+        sized.filter(F.col("n") > cap).select("bid", *_BAND_KEY).join(rh_tbl, ["bid", "band_id"])
     )
     subsizes = big.groupBy("band_id", "band_hash", "rh").agg(
         F.count(F.lit(1)).alias("m")
@@ -874,10 +801,6 @@ def _refined_candidate_ids(
 
 def refine_star_only_ids(
     corpus: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_planes: int = 16,
-    n_bands: int = 4,
     dim: int | None = None,
     cap: int = EMB_BUCKET_CAP,
     bands: DataFrame | None = None,
@@ -885,7 +808,7 @@ def refine_star_only_ids(
     """IDs whose candidate coverage under adaptive re-banding is
     STAR-ONLY in every band — i.e. members for whom no band gave an
     exhaustive all-pairs stage (their bucket was oversized in all
-    ``n_bands`` bands AND their refine sub-bucket was still oversized
+    LSH_N_BANDS bands AND their refine sub-bucket was still oversized
     in each), so they are reachable in the detected graph only through
     representative/anchor edges (branches 3-4 of
     ``_refined_candidate_ids``).
@@ -910,35 +833,22 @@ def refine_star_only_ids(
     builds an identical one — pass it via ``bands`` so the projection
     and its checkpoint run ONCE per job, not once per consumer
     (leakage_safe_split does)."""
-    from map_reduce_lite_spark.ops.similarity import (
-        lsh_band_hashes,
-        refine_hyperplanes,
-    )
-
-    spark = corpus.sparkSession
-    empty = spark.createDataFrame([], f"{id_col} long")
+    empty = corpus.sparkSession.createDataFrame([], "vec_id long")
+    dim = _vec_dim(corpus, dim)
     if dim is None:
-        dim = corpus.select(F.size(vec_col).alias("d")).first()[0]
-        if dim is None:
-            return empty
+        return empty
     if bands is None:
         # materialized once: reused by the probe and both joins below
-        bands = lsh_band_table(corpus, id_col, vec_col, dim, n_planes, n_bands)
-    sizes = bands.groupBy("band_id", "band_hash").agg(F.count(F.lit(1)).alias("n"))
-    max_bucket = sizes.agg(F.max("n")).first()[0]
-    if max_bucket is None or max_bucket <= cap:
+        bands = lsh_band_table(corpus, dim)
+    if not _over_cap(bands, _BAND_KEY, cap):
         return empty
-    sized = bands.join(F.broadcast(sizes), ["band_id", "band_hash"])
-    big = sized.filter(F.col("n") > cap).select("bid", "band_id", "band_hash")
-    rplanes = refine_hyperplanes(dim)
-    rh_tbl = (
-        corpus.join(big.select("bid").distinct(), F.col(id_col) == F.col("bid"))
-        .select(
-            F.col(id_col).alias("bid"),
-            F.posexplode(lsh_band_hashes(vec_col, rplanes, n_bands)).alias(
-                "band_id", "rh"
-            ),
-        )
+    sizes = bands.groupBy(*_BAND_KEY).agg(F.count(F.lit(1)).alias("n"))
+    sized = bands.join(F.broadcast(sizes), _BAND_KEY)
+    big = sized.filter(F.col("n") > cap).select("bid", *_BAND_KEY)
+    rh_tbl = _band_rows(
+        corpus.join(big.select("bid").distinct(), F.col("vec_id") == F.col("bid")),
+        refine_hyperplanes(dim),
+        hash_col="rh",
     )
     bigr = big.join(rh_tbl, ["bid", "band_id"])
     subsizes = bigr.groupBy("band_id", "band_hash", "rh").agg(
@@ -957,9 +867,9 @@ def refine_star_only_ids(
         .distinct()
     )
     return (
-        corpus.select(F.col(id_col).alias("bid"))
+        corpus.select(F.col("vec_id").alias("bid"))
         .join(exact, "bid", "left_anti")
-        .select(F.col("bid").alias(id_col))
+        .select(F.col("bid").alias("vec_id"))
     )
 
 
@@ -967,10 +877,6 @@ def embedding_near_dup_pairs(
     corpus: DataFrame,
     threshold: float = NEAR_DUP_COS,
     method: str = "exact",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_planes: int = 16,
-    n_bands: int = 4,
     dim: int | None = None,
     cap: int = EMB_BUCKET_CAP,
     bands: DataFrame | None = None,
@@ -982,8 +888,7 @@ def embedding_near_dup_pairs(
     the pair stage (leakage_safe_split also feeds it to
     refine_star_only_ids) project + checkpoint it exactly once.
     Callers passing it are responsible for it being the SAME banding
-    (mrl band hashes over ``vec_col``) — build it with
-    ``lsh_band_table``.
+    — build it with ``lsh_band_table``.
 
     ``method="exact"`` scores the full triangular self-join — the oracle
     path, quadratic in corpus size, fine for verification corpora.
@@ -997,14 +902,11 @@ def embedding_near_dup_pairs(
     corpus, band collisions are a constant fraction of n² — measured
     66 s at 20k random unit vectors with the pair scoring dominating
     the whole components family. When any (band_id, band_hash) bucket
-    exceeds ``cap``, oversized buckets are salted-split into
-    ceil(size/cap) sub-buckets and pairs form only within a sub-bucket,
-    bounding per-bucket work at cap² regardless of collision density;
-    a sizing probe skips the machinery entirely when no bucket is
-    oversized (the driver fixtures), where the plain join is provably
-    identical. The SQL twins replay sizes+salt unconditionally
-    (n_sub=1 → sub ≡ 0 identity), so both branches hash-match them;
-    cap-ENGAGED parity is pinned in tests/test_capcorpus.py.
+    exceeds ``cap``, oversized buckets are salted-split (salt "emb",
+    similarity._salted_split) into ceil(size/cap) sub-buckets and pairs
+    form only within a sub-bucket, bounding per-bucket work at cap²
+    regardless of collision density; cap-ENGAGED parity is pinned in
+    tests/test_capcorpus.py. An empty corpus gives zero pairs.
 
     ``method="lsh_refine"`` (r11): same banding, but oversized buckets
     are ADAPTIVELY RE-BANDED instead of salted (see
@@ -1013,89 +915,36 @@ def embedding_near_dup_pairs(
     undetected cross-split leakage. Same bounded per-bucket cost, no
     intra-sub-bucket pair dropped; when no bucket is oversized all
     three lsh variants are the identical plain band join."""
-    from map_reduce_lite_spark.ops.similarity import (
-        _dot,
-        _hyperplanes,
-        _norm,
-        lsh_band_hashes,
-    )
-
-    # norms once per vector; sim = dot/(a_norm*b_norm) matches the
-    # oracle's sqrt(a·a)*sqrt(b·b) operand order → bit-identical
-    a = corpus.select(
-        F.col(id_col).alias("keep_id"),
-        F.col(vec_col).alias("a_vec"),
-        _norm(F.col(vec_col)).alias("a_norm"),
-    )
-    b = corpus.select(
-        F.col(id_col).alias("dup_id"),
-        F.col(vec_col).alias("b_vec"),
-        _norm(F.col(vec_col)).alias("b_norm"),
-    )
-    from map_reduce_lite_spark.ops.similarity import _spread
-
     if method == "exact":
         # BNLJ parallelism follows the streamed (left) side's partitions;
         # one parquet split would mean one core for the whole O(n²) scan
-        pairs = _spread(a, "keep_id").join(b, F.col("keep_id") < F.col("dup_id"))
-    elif method in ("lsh", "lsh_refine"):
-        if dim is None:  # probing costs a Spark job — callers should pass it
-            dim = corpus.select(F.size(vec_col).alias("d")).first()[0]
-        if bands is None:
-            # band join + pair dedup on IDS ONLY (8-byte shuffle keys),
-            # then join the vectors back for scoring — shuffling 64-float
-            # vectors through the ×n_bands explode and the dedup would
-            # cost ~64× the bytes for nothing
-            bands = lsh_band_table(
-                corpus, id_col, vec_col, dim, n_planes, n_bands
-            )  # hyperplane projections run once, not once per self-join
-            # side (ids + band hashes only — tiny); the materialized
-            # table also feeds the cap's sizing probe
-        max_bucket = (
-            bands.groupBy("band_id", "band_hash")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .agg(F.max("n"))
-            .first()[0]
+        pairs = (
+            _spread(_vecs(corpus, "keep_id", "a"), "keep_id")
+            .join(_vecs(corpus, "dup_id", "b"), F.col("keep_id") < F.col("dup_id"))
+            .select("keep_id", "dup_id", _cos("a", "b").alias("sim"))
         )
-        if max_bucket is not None and max_bucket > cap and method == "lsh_refine":
-            ids = _refined_candidate_ids(
-                corpus, bands, id_col, vec_col, dim, cap, n_bands
+    elif method in ("lsh", "lsh_refine"):
+        dim = _vec_dim(corpus, dim)
+        if dim is None:
+            return corpus.sparkSession.createDataFrame(
+                [], "keep_id long, dup_id long, sim_e9 long"
             )
-        elif max_bucket is not None and max_bucket > cap:
-            sizes = bands.groupBy("band_id", "band_hash").agg(
-                ((F.count(F.lit(1)) + F.lit(cap - 1)) / F.lit(cap))
-                .cast("long")
-                .alias("n_sub")
-            )
-            salted = bands.join(
-                F.broadcast(sizes), ["band_id", "band_hash"]
-            ).withColumn(
-                "sub",
-                F.pmod(
-                    md5_60bit(
-                        F.concat_ws(
-                            "|",
-                            F.lit("emb"),
-                            F.col("band_id").cast("string"),
-                            F.col("bid").cast("string"),
-                        )
-                    ),
-                    F.col("n_sub"),
-                ),
-            )
-            ids = _band_self_join(salted, on=["band_id", "band_hash", "sub"])
+        if bands is None:
+            # band join + pair dedup on IDS ONLY (8-byte shuffle keys);
+            # the hyperplane projections run once, not once per self-join
+            # side, and the materialized table also feeds the sizing probe
+            bands = lsh_band_table(corpus, dim)
+        over_cap = _over_cap(bands, _BAND_KEY, cap)
+        if over_cap and method == "lsh_refine":
+            ids = _refined_candidate_ids(corpus, bands, dim, cap)
         else:
-            ids = _band_self_join(bands, on=["band_id", "band_hash"])
-        pairs = _spread(ids, "keep_id").join(a, "keep_id").join(b, "dup_id")
+            salted = _salted_split(bands, _BAND_KEY, "bid", "emb", cap, over_cap)
+            ids = _band_self_join(salted, [*_BAND_KEY, "sub"])
+        pairs = _score_pairs(_spread(ids, "keep_id"), "keep_id", "dup_id", corpus)
     else:
         raise ValueError(f"unknown method {method!r}")
-    sim = _dot(F.col("a_vec"), F.col("b_vec")) / (F.col("a_norm") * F.col("b_norm"))
-    return (
-        pairs.select("keep_id", "dup_id", sim.alias("sim"))
-        .filter(F.col("sim") >= F.lit(threshold))
-        .select(
-            "keep_id", "dup_id", F.floor(F.col("sim") * 1e9).cast("long").alias("sim_e9")
-        )
+    return pairs.filter(F.col("sim") >= F.lit(threshold)).select(
+        "keep_id", "dup_id", F.floor(F.col("sim") * 1e9).cast("long").alias("sim_e9")
     )
 
 
@@ -1103,8 +952,6 @@ def build_near_dup_pairs(
     corpus: DataFrame,
     path: str,
     threshold: float = NEAR_DUP_COS,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     dim: int | None = None,
     cap: int = EMB_BUCKET_CAP,
     method: str = "lsh",
@@ -1129,13 +976,7 @@ def build_near_dup_pairs(
     since a salt's dropped pairs would become silent cross-split
     leakage in every downstream consumer of the artifact)."""
     embedding_near_dup_pairs(
-        corpus,
-        threshold=threshold,
-        method=method,
-        id_col=id_col,
-        vec_col=vec_col,
-        dim=dim,
-        cap=cap,
+        corpus, threshold=threshold, method=method, dim=dim, cap=cap
     ).write.mode("overwrite").parquet(path)
     return corpus.sparkSession.read.parquet(path)
 
@@ -1146,8 +987,6 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _embedding_cosine_sql() -> str:
-    from map_reduce_lite_spark.ops.similarity import _sql_cos
-
     return f"""
 WITH scored AS (
   SELECT a.vec_id AS keep_id, b.vec_id AS dup_id,
@@ -1167,22 +1006,11 @@ def dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     cosine verify on colliding pairs only. The exact quadratic query
     above is the verification oracle for recall; THIS is the operator a
     production pipeline runs."""
-    from map_reduce_lite_spark.ops.similarity import EMB_DIM
-
     emb = load_table(spark, sf_dir, "embeddings")
     return embedding_near_dup_pairs(emb, method="lsh", dim=EMB_DIM)
 
 
 def _embedding_lsh_sql() -> str:
-    from map_reduce_lite_spark.ops.similarity import (
-        EMB_DIM,
-        LSH_N_BANDS,
-        LSH_PLANES,
-        _hyperplanes,
-        _sql_cos,
-        sql_capped_bands_chain,
-    )
-
     planes = _hyperplanes(EMB_DIM, LSH_PLANES)
     return f"""
 WITH {sql_capped_bands_chain(planes, LSH_N_BANDS, EMB_BUCKET_CAP, "emb")}
@@ -1218,7 +1046,6 @@ def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     min-label propagation on Spark; the oracle replays it with a
     recursive transitive-closure CTE over the same LSH pair set."""
     from map_reduce_lite_spark.ops.graph import connected_components
-    from map_reduce_lite_spark.ops.similarity import EMB_DIM
 
     emb = load_table(spark, sf_dir, "embeddings")
     pairs = embedding_near_dup_pairs(emb, method="lsh", dim=EMB_DIM)
@@ -1229,15 +1056,6 @@ def _components_reach_cte() -> str:
     """Shared WITH RECURSIVE chain ending in ``reach`` — the transitive
     closure of the LSH-blocked near-dup pair graph. Consumed by the
     components oracle AND the survivors oracle."""
-    from map_reduce_lite_spark.ops.similarity import (
-        EMB_DIM,
-        LSH_N_BANDS,
-        LSH_PLANES,
-        _hyperplanes,
-        _sql_cos,
-        sql_capped_bands_chain,
-    )
-
     planes = _hyperplanes(EMB_DIM, LSH_PLANES)
     return f"""
 WITH RECURSIVE {sql_capped_bands_chain(planes, LSH_N_BANDS, EMB_BUCKET_CAP, "emb")}
@@ -1295,7 +1113,6 @@ def dedup_survivors_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     hazard. Oracle: the same recursive transitive-closure CTE, keeping
     ids that are never a non-minimum member of their component."""
     from map_reduce_lite_spark.ops.graph import dedup_survivors
-    from map_reduce_lite_spark.ops.similarity import EMB_DIM
 
     emb = load_table(spark, sf_dir, "embeddings")
     pairs = embedding_near_dup_pairs(emb, method="lsh", dim=EMB_DIM)
@@ -1464,7 +1281,6 @@ def dedup_cluster_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
     key spaces are ≤ the paired-node count, rows are 8-16 bytes.
     Output is O(max cluster size) rows. Integers end-to-end."""
     from map_reduce_lite_spark.ops.graph import connected_components
-    from map_reduce_lite_spark.ops.similarity import EMB_DIM
 
     emb = load_table(spark, sf_dir, "embeddings")
     pairs = embedding_near_dup_pairs(emb, method="lsh", dim=EMB_DIM)

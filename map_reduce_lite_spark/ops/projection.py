@@ -44,6 +44,7 @@ from map_reduce_lite_spark.ops.similarity import (
     _dot,
     _spread,
     _sql_cos,
+    _topk,
     _sql_dot,
 )
 
@@ -271,17 +272,7 @@ def similarity_ann_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("sim"),
         )
     )
-    we = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (
-        exact.withColumn("rank", F.row_number().over(we))
-        .filter(F.col("rank") <= TOP_K)
-        .select(
-            "query_id",
-            "neighbor_id",
-            "rank",
-            F.floor(F.col("sim") * 1e9).cast("long").alias("sim_e9"),
-        )
-    )
+    return _topk(exact, "query_id", "neighbor_id", TOP_K)
 
 
 def _ann_rerank_sql() -> str:

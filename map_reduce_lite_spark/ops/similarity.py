@@ -1,19 +1,28 @@
 """Similarity search over embedding columns (array<float>).
 
-Two paths, mirroring how a 100 TB vector corpus is actually served:
+Every vector-pair operator here and in ops/dedup.py has one shape:
+generate candidate pairs per bucket, then score them in one shared
+stage (the V-SMART-Join split). A small private core builds it:
 
-- **brute-force top-k** (the exactness baseline): broadcast the query
-  set, one narrow pass over the corpus computing cosine, per-query top-k
-  via window rank. Cost is O(|corpus| × |queries|) FLOPs but only ONE
-  scan and ONE small shuffle (corpus × n_queries rows, pruned to top-k
-  by partial TakeOrdered semantics). All math stays in JVM codegen —
-  zip_with + aggregate, no Python.
-- **LSH-bucketed ANN** (the scale path): random-hyperplane signatures
-  bucket the corpus once (write-time at scale); queries probe only their
-  bucket. Hyperplanes are seeded and passed as literals, so the operator
-  is deterministic; recall vs brute force is property-tested
-  (tests/test_similarity.py), and the driver gets a rows-only check —
-  banding hash order isn't portable SQL.
+- ``lsh_band_table`` / ``_band_rows``: random-hyperplane band hashes.
+  The planes are seeded and passed as literals, so banding is
+  deterministic and the DuckDB oracles replay it bit for bit
+  (``sql_band_hashes`` shares the bit-packing loop).
+- ``_band_self_join``: id-only pairs within a bucket, deduplicated on
+  8-byte keys before any vector is attached.
+- ``_salted_split``: the hot-bucket cap. A sizing probe, then
+  ceil(size/cap) salted sub-buckets per oversized bucket, or
+  ``sub = 0`` when no bucket is over the cap.
+- ``_score_pairs`` / ``_cos``: exact cosine from per-vector norms,
+  attached after the id-only join.
+- ``_topk``: the per-key rank window that ends every top-k query.
+
+Brute-force top-k (the exactness baseline) broadcasts the query set
+and scores it in one narrow pass over the corpus. The LSH, IVF and
+k-NN graph paths generate candidates first and share the scoring and
+top-k stages. All math stays in JVM codegen (zip_with + aggregate, no
+Python); recall vs brute force is property-tested
+(tests/test_similarity.py).
 
 Cosine determinism vs the DuckDB oracle: both sides cast each float
 element to double, multiply pairwise, and fold left-to-right
@@ -28,6 +37,8 @@ tiebreak.
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
 
 from map_reduce_lite_spark.registry import Query, md5_60bit, sql_md5_60bit
@@ -37,7 +48,10 @@ from map_reduce_lite_spark.session import materialize
 N_QUERY_VECS = 8  # vec_id < 8 form the query set in the oracle-checked demo
 TOP_K = 5
 
+EMB_DIM = 64  # test-table embedding dimension (pins the oracle's planes)
 LSH_PLANES = 16  # random-hyperplane bits for the ANN path
+LSH_N_BANDS = 4
+_BAND_KEY = ["band_id", "band_hash"]  # an embedding band bucket
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -71,59 +85,79 @@ def _norm(a: Column) -> Column:
     return F.sqrt(_dot(a, a))
 
 
-def cosine(a: Column, b: Column) -> Column:
-    return _dot(a, b) / (_norm(a) * _norm(b))
+def _vecs(df: DataFrame, id_alias: str, p: str, *extra: Column) -> DataFrame:
+    """(id_alias, *extra, {p}_vec, {p}_norm). Norms are computed once per
+    vector, not once per pair: sim = dot/(a_norm*b_norm) is the same
+    expression tree the oracle evaluates (sqrt(a·a) first), so
+    precomputing keeps bit-identity while cutting FLOPs ~3×."""
+    return df.select(
+        F.col("vec_id").alias(id_alias),
+        *extra,
+        F.col("embedding").alias(f"{p}_vec"),
+        _norm(F.col("embedding")).alias(f"{p}_norm"),
+    )
 
 
-def brute_force_topk(
+def _cos(a: str, b: str) -> Column:
+    """Cosine of the ``_vecs`` columns with prefixes ``a`` and ``b``."""
+    return _dot(F.col(f"{a}_vec"), F.col(f"{b}_vec")) / (
+        F.col(f"{a}_norm") * F.col(f"{b}_norm")
+    )
+
+
+def _score_pairs(
+    pairs: DataFrame,
+    a_id: str,
+    b_id: str,
     corpus: DataFrame,
-    queries: DataFrame,
-    k: int = TOP_K,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    queries: DataFrame | None = None,
 ) -> DataFrame:
-    """Exact cosine top-k of each query against the corpus.
+    """(a_id, b_id, sim) for an id-only pair list: each vector and its
+    norm join on after the pairs are final, so every shuffle before
+    this one moves 8-byte keys instead of 64-float arrays. With
+    ``queries`` the ``a`` side comes from it and is broadcast after the
+    corpus side joins (the ANN query shape)."""
+    b = _vecs(corpus, b_id, "b")
+    if queries is None:
+        joined = pairs.join(_vecs(corpus, a_id, "a"), a_id).join(b, b_id)
+    else:
+        joined = pairs.join(b, b_id).join(F.broadcast(_vecs(queries, a_id, "a")), a_id)
+    return joined.select(a_id, b_id, _cos("a", "b").alias("sim"))
 
-    ``queries`` is expected to be small — it is broadcast, making the
-    scan embarrassingly parallel with no corpus shuffle."""
-    # norms once per vector, not once per pair: sim = dot/(q_norm*c_norm)
-    # is the same expression tree the oracle evaluates (sqrt(q·q) first),
-    # so precomputing keeps bit-identity while cutting FLOPs ~3×
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
-        _norm(F.col(vec_col)).alias("q_norm"),
-    )
-    c = _spread(
-        corpus.select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).alias("c_vec"),
-            _norm(F.col(vec_col)).alias("c_norm"),
-        ),
-        "neighbor_id",
-    )
-    scored = (
-        c.crossJoin(F.broadcast(q))
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            (_dot(F.col("q_vec"), F.col("c_vec")) / (F.col("q_norm") * F.col("c_norm"))).alias("sim"),
-        )
-    )
-    # rank on the raw (bit-identical) cosine; expose it floor-scaled to an
-    # integer — round() can differ by 1 ulp between engines, floor cannot
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
+
+def _topk(
+    scored: DataFrame, key: str, tie: str, k: int, cols: list[str] | None = None
+) -> DataFrame:
+    """Per-``key`` top-``k`` of ``scored`` by sim desc, ``tie`` asc:
+    ``cols`` (default key, tie), ``rank`` as int, and ``sim_e9``. Ranking
+    is on the raw (bit-identical) cosine; the score is exposed
+    floor-scaled to an integer — round() can differ by 1 ulp between
+    engines, floor cannot."""
+    w = Window.partitionBy(key).orderBy(F.desc("sim"), F.asc(tie))
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select(
-            "query_id",
-            "neighbor_id",
+            *(cols or [key, tie]),
             F.col("rank").cast("int").alias("rank"),
             F.floor(F.col("sim") * 1e9).cast("long").alias("sim_e9"),
         )
     )
+
+
+def brute_force_topk(corpus: DataFrame, queries: DataFrame, k: int = TOP_K) -> DataFrame:
+    """Exact cosine top-k of each query against the corpus.
+
+    ``queries`` is expected to be small — it is broadcast, making the
+    scan embarrassingly parallel with no corpus shuffle."""
+    q = _vecs(queries, "query_id", "q")
+    c = _spread(_vecs(corpus, "neighbor_id", "c"), "neighbor_id")
+    scored = (
+        c.crossJoin(F.broadcast(q))
+        .filter(F.col("neighbor_id") != F.col("query_id"))
+        .select("query_id", "neighbor_id", _cos("q", "c").alias("sim"))
+    )
+    return _topk(scored, "query_id", "neighbor_id", k)
 
 
 def similarity_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -144,48 +178,20 @@ def similarity_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     ANN candidate pool (similarity_ann_ivf shape) instead of the full
     corpus; the exact pass is the recall oracle for that funnel."""
     emb = load_table(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") < N_QUERY_VECS).select(
-        F.col("vec_id").alias("query_id"),
+    q = _vecs(
+        emb.filter(F.col("vec_id") < N_QUERY_VECS),
+        "query_id",
+        "q",
         F.col("label").alias("q_label"),
-        F.col("embedding").alias("q_vec"),
-        _norm(F.col("embedding")).alias("q_norm"),
     )
-    c = _spread(
-        emb.select(
-            F.col("vec_id").alias("neg_id"),
-            F.col("label").alias("neg_label"),
-            F.col("embedding").alias("c_vec"),
-            _norm(F.col("embedding")).alias("c_norm"),
-        ),
-        "neg_id",
-    )
+    c = _spread(_vecs(emb, "neg_id", "c", F.col("label").alias("neg_label")), "neg_id")
+    cols = ["query_id", "q_label", "neg_id", "neg_label"]
     scored = (
         c.crossJoin(F.broadcast(q))
         .filter(F.col("neg_label") != F.col("q_label"))
-        .select(
-            "query_id",
-            "q_label",
-            "neg_id",
-            "neg_label",
-            (
-                _dot(F.col("q_vec"), F.col("c_vec"))
-                / (F.col("q_norm") * F.col("c_norm"))
-            ).alias("sim"),
-        )
+        .select(*cols, _cos("q", "c").alias("sim"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neg_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select(
-            "query_id",
-            "q_label",
-            "neg_id",
-            "neg_label",
-            F.col("rank").cast("int").alias("rank"),
-            F.floor(F.col("sim") * 1e9).cast("long").alias("sim_e9"),
-        )
-    )
+    return _topk(scored, "query_id", "neg_id", TOP_K, cols)
 
 
 def similarity_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -326,25 +332,130 @@ def lsh_band_hashes(vec: str, planes: list[list[float]], n_bands: int) -> Column
             "to a column first (Column objects can't be safely rendered "
             "back into SQL text)"
         )
-    vec_expr = vec
-    bits = [_plane_bit_expr(vec_expr, p) for p in planes]
-    per_band = max(1, len(planes) // n_bands)
-    bands = []
-    for b in range(n_bands):
-        chunk = bits[b * per_band : (b + 1) * per_band]
-        if not chunk:
-            break
-        h = chunk[0]
-        for bit in chunk[1:]:
-            h = f"({h} * 2 + {bit})"
-        bands.append(h)
+    bands = _pack_bands([_plane_bit_expr(vec, p) for p in planes], n_bands)
     return F.expr("array(" + ", ".join(bands) + ")")
 
 
-# retained single-signature helper (ingest-time partitioning key)
-def lsh_signature(vec: str, planes: list[list[float]]) -> Column:
-    """Sign-bit signature of ``vec`` against fixed hyperplanes, as an int."""
-    return lsh_band_hashes(vec, planes, 1)[0]
+def _pack_bands(bits: list[str], n_bands: int) -> list[str]:
+    """Split sign-bit expressions contiguously into ``n_bands`` chunks and
+    pack each into one int, h = h*2 + bit — the one packing loop behind
+    ``lsh_band_hashes`` and its SQL twin ``sql_band_hashes``."""
+    per_band = max(1, len(bits) // n_bands)
+    chunks = [bits[b * per_band : (b + 1) * per_band] for b in range(n_bands)]
+    return [
+        reduce(lambda h, bit: f"({h} * 2 + {bit})", chunk)
+        for chunk in chunks
+        if chunk
+    ]
+
+
+def _band_rows(
+    df: DataFrame, planes: list[list[float]], id_alias: str = "bid", hash_col: str = "band_hash"
+) -> DataFrame:
+    """(id_alias, band_id, hash_col): one row per vector and band."""
+    return df.select(
+        F.col("vec_id").alias(id_alias),
+        F.posexplode(lsh_band_hashes("embedding", planes, LSH_N_BANDS)).alias(
+            "band_id", hash_col
+        ),
+    )
+
+
+def _vec_dim(corpus: DataFrame, dim: int | None) -> int | None:
+    """``dim``, else the length of the corpus's first vector (one Spark
+    job — callers should pass it). None on an empty corpus: callers then
+    return their empty result."""
+    if dim is None:
+        row = corpus.select(F.size("embedding")).first()
+        dim = row[0] if row else None
+    return dim
+
+
+def lsh_band_table(corpus: DataFrame, dim: int | None = None) -> DataFrame:
+    """Materialized (bid, band_id, band_hash) banding of ``corpus`` —
+    the shared first stage of every embedding-LSH consumer, so a job
+    needing the table more than once (a sizing probe and both
+    self-join sides; the pair stage and the star-only coverage metric
+    in leakage_safe_split) projects and checkpoints it exactly once."""
+    dim = _vec_dim(corpus, dim)
+    if dim is None:
+        return corpus.sparkSession.createDataFrame(
+            [], "bid long, band_id int, band_hash int"
+        )
+    planes = _hyperplanes(dim, LSH_PLANES)
+    return materialize(_band_rows(corpus, planes), eager=True)
+
+
+def _band_self_join(
+    bands: DataFrame, on: list[str], a: str = "keep_id", b: str = "dup_id"
+) -> DataFrame:
+    """Triangular self-join of a band table on its bucket key columns →
+    distinct (a, b) candidate ids with a < b. IDS ONLY on the shuffle
+    (8-byte keys); vectors join back after the pair dedup."""
+    return (
+        bands.select(F.col("bid").alias(a), *on)
+        .join(bands.select(F.col("bid").alias(b), *on), on)
+        .filter(F.col(a) < F.col(b))
+        .dropDuplicates([a, b])
+        .select(a, b)
+    )
+
+
+def _over_cap(bands: DataFrame, keys: list[str], cap: int) -> bool:
+    """Sizing probe: does any ``keys`` bucket hold more than ``cap`` rows?
+    One scalar job over the (materialized) band table."""
+    max_bucket = (
+        bands.groupBy(*keys)
+        .agg(F.count(F.lit(1)).alias("n"))
+        .agg(F.max("n"))
+        .first()[0]
+    )
+    return max_bucket is not None and max_bucket > cap
+
+
+def _salted_split(
+    bands: DataFrame,
+    keys: list[str],
+    id_col: str,
+    salt: str,
+    cap: int,
+    over_cap: bool | None = None,
+) -> DataFrame:
+    """The hot-bucket cap: ``bands`` plus a ``sub`` column splitting every
+    bucket (``keys``) of more than ``cap`` members into ceil(size/cap)
+    sub-buckets by a salted portable hash of (salt, band, id). Pairs
+    then form only within a sub-bucket, bounding per-bucket work at
+    cap² however adversarial the collision density. The band (first
+    key) in the salt makes the split independent across bands.
+
+    ``over_cap`` is the sizing probe's answer (probed here when not
+    given). When no bucket is over the cap, ``sub = 0``: the split is
+    then provably an identity and the sizes broadcast, salted pmod and
+    wider join key are skipped. The SQL twins replay sizes + salt
+    unconditionally (n_sub = 1 → sub ≡ 0), so both branches hash-match
+    them."""
+    if over_cap is None:
+        over_cap = _over_cap(bands, keys, cap)
+    if not over_cap:
+        return bands.withColumn("sub", F.lit(0).cast("long"))
+    # bucket sizes: ≤ n_bands·2^bits rows however big the corpus — broadcast
+    sizes = bands.groupBy(*keys).agg(
+        ((F.count(F.lit(1)) + F.lit(cap - 1)) / F.lit(cap)).cast("long").alias("n_sub")
+    )
+    return bands.join(F.broadcast(sizes), keys).withColumn(
+        "sub",
+        F.pmod(
+            md5_60bit(
+                F.concat_ws(
+                    "|",
+                    F.lit(salt),
+                    F.col(keys[0]).cast("string"),
+                    F.col(id_col).cast("string"),
+                )
+            ),
+            F.col("n_sub"),
+        ),
+    )
 
 
 def ann_lsh_topk(
@@ -353,17 +464,14 @@ def ann_lsh_topk(
     dim: int,
     k: int = TOP_K,
     n_planes: int = LSH_PLANES,
-    n_bands: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Approximate top-k via banded random-hyperplane LSH.
 
-    ``n_planes`` sign bits split into ``n_bands`` tables of r =
-    n_planes/n_bands bits; a corpus vector is a candidate for a query iff
-    they collide in ANY band — recall 1-(1-p^r)^L for per-bit agreement
-    p = 1 - θ/π. Wider bands (larger r) cut false positives; more bands
-    (larger L) raise recall.
+    ``n_planes`` sign bits split into LSH_N_BANDS tables of r =
+    n_planes/LSH_N_BANDS bits; a corpus vector is a candidate for a
+    query iff they collide in ANY band — recall 1-(1-p^r)^L for per-bit
+    agreement p = 1 - θ/π. Wider bands (larger r) cut false positives;
+    more bands (larger L) raise recall.
 
     At 100 TB: band hashes are computed once at ingest and the corpus is
     written as L bucket tables (or one table partitioned by
@@ -376,20 +484,10 @@ def ann_lsh_topk(
     # band join + candidate dedup on IDS ONLY; vectors join back after —
     # the ×n_bands explode and the pair-dedup shuffle then move 8-byte
     # keys instead of 64-float arrays
-    c_bands = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.posexplode(lsh_band_hashes(vec_col, planes, n_bands)).alias(
-            "band_id", "band_hash"
-        ),
-    )
-    q_bands = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.posexplode(lsh_band_hashes(vec_col, planes, n_bands)).alias(
-            "band_id", "band_hash"
-        ),
-    )
+    c_bands = _band_rows(corpus, planes, "neighbor_id")
+    q_bands = _band_rows(queries, planes, "query_id")
     cand = _spread(
-        c_bands.join(F.broadcast(q_bands), ["band_id", "band_hash"])
+        c_bands.join(F.broadcast(q_bands), _BAND_KEY)
         .filter(F.col("neighbor_id") != F.col("query_id"))
         # a pair colliding in multiple bands appears once per collision;
         # dedup before scoring so cosine runs once per candidate pair
@@ -397,40 +495,10 @@ def ann_lsh_topk(
         .select("query_id", "neighbor_id"),
         "neighbor_id",
     )
-    c_vecs = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("c_vec"),
-        _norm(F.col(vec_col)).alias("c_norm"),
-    )
-    q_vecs = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
-        _norm(F.col(vec_col)).alias("q_norm"),
-    )
-    scored = (
-        cand.join(c_vecs, "neighbor_id")
-        .join(F.broadcast(q_vecs), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            (_dot(F.col("q_vec"), F.col("c_vec")) / (F.col("q_norm") * F.col("c_norm"))).alias("sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.col("rank").cast("int").alias("rank"),
-            F.floor(F.col("sim") * 1e9).cast("long").alias("sim_e9"),
-        )
-    )
+    scored = _score_pairs(cand, "query_id", "neighbor_id", corpus, queries)
+    return _topk(scored, "query_id", "neighbor_id", k)
 
 
-EMB_DIM = 64  # test-table embedding dimension (pins the oracle's planes)
-LSH_N_BANDS = 4
 # Adaptive re-banding (r11): hyperplanes used to REFINE an oversized
 # band bucket, chunked per band (REFINE_PLANES / LSH_N_BANDS each) so a
 # pair split by one band's refinement keeps its independent chance in
@@ -444,6 +512,8 @@ def refine_hyperplanes(dim: int) -> list[list[float]]:
     """The refinement plane set — shared by the Spark path and every SQL
     twin so refined sub-bucket membership is bit-identical."""
     return _hyperplanes(dim, REFINE_PLANES, seed=REFINE_SEED)
+
+
 KNN_GRAPH_K = 5  # neighbors kept per node in the corpus k-NN graph
 KNN_BUCKET_CAP = 512  # max members per LSH band bucket before salted split
 
@@ -470,18 +540,7 @@ def knn_topk_edges(
     once id-ordered and emitted in both directions (r12), so every
     node gets its own neighbor list (unlike the dedup pair set, which
     keeps only the id-ordered rows)."""
-    scored = _knn_scored_edges(emb, cap=cap)
-    w = Window.partitionBy("src_id").orderBy(F.desc("sim"), F.asc("dst_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "src_id",
-            "dst_id",
-            F.col("rank").cast("int").alias("rank"),
-            F.floor(F.col("sim") * 1e9).cast("long").alias("sim_e9"),
-        )
-    )
+    return _topk(_knn_scored_edges(emb, cap=cap), "src_id", "dst_id", k)
 
 
 def build_knn_edges(
@@ -520,61 +579,15 @@ def _knn_scored_edges(emb: DataFrame, cap: int = KNN_BUCKET_CAP) -> DataFrame:
     """(src_id, dst_id, sim) for every directed LSH band collision —
     the shared candidate-scoring stage of the k-NN graph family.
 
-    The band table is materialized once and reused by the sizing probe
-    and both self-join sides.
+    The band table (``lsh_band_table``) is materialized once and reused
+    by the sizing probe and both self-join sides.
 
-    Hot-bucket cap (the simhash_pairs mechanism, ops/dedup.py): when
-    any (band_id, band_hash) bucket exceeds ``cap`` members, every
-    oversized bucket is salted-split into ceil(size/cap) sub-buckets
-    and pairs form only within a sub-bucket — bounding the self-join's
-    per-bucket work at cap² however adversarial the corpus's collision
-    density (random/unclustered vectors collide at a constant fraction
-    of n² per band; real corpora cluster, but the bound must not
-    depend on that). Each node still sees ~cap co-bucketed candidates
-    per band — far more than the K=5 it keeps. A sizing probe skips
-    the split machinery entirely when no bucket is oversized (the
-    driver fixtures), where the plain join is provably identical; the
-    SQL oracle replays sizes+salt unconditionally (n_sub=1 → sub=0 is
-    an identity), so both branches hash-match it."""
-    planes = _hyperplanes(EMB_DIM, LSH_PLANES)
-    bands = materialize(
-        emb.select(
-            "vec_id",
-            F.posexplode(lsh_band_hashes("embedding", planes, LSH_N_BANDS)).alias(
-                "band_id", "band_hash"
-            ),
-        ),
-        eager=True,
-    )  # probe + both self-join sides reuse it
-    max_bucket = (
-        bands.groupBy("band_id", "band_hash")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .agg(F.max("n"))
-        .first()[0]
-    )
-    if max_bucket is not None and max_bucket > cap:
-        # bucket sizes: ≤ n_bands·2^bits rows however big the corpus
-        sizes = bands.groupBy("band_id", "band_hash").agg(
-            ((F.count(F.lit(1)) + F.lit(cap - 1)) / F.lit(cap))
-            .cast("long")
-            .alias("n_sub")
-        )
-        sp = bands.join(F.broadcast(sizes), ["band_id", "band_hash"]).withColumn(
-            "sub",
-            F.pmod(
-                md5_60bit(
-                    F.concat_ws(
-                        "|",
-                        F.lit("knb"),
-                        F.col("band_id").cast("string"),
-                        F.col("vec_id").cast("string"),
-                    )
-                ),
-                F.col("n_sub"),
-            ),
-        )
-    else:
-        sp = bands.withColumn("sub", F.lit(0).cast("long"))
+    Hot-bucket cap (``_salted_split``, salt "knb"): random/unclustered
+    vectors collide at a constant fraction of n² per band; real corpora
+    cluster, but the bound must not depend on that. Each node still
+    sees ~cap co-bucketed candidates per band — far more than the K=5
+    it keeps."""
+    sp = _salted_split(lsh_band_table(emb, EMB_DIM), _BAND_KEY, "bid", "knb", cap)
     # r12 (guide §2.3): generate ID-ORDERED pairs (vec_id <), score each
     # undirected pair ONCE, then emit both directions by exploding a
     # 2-struct array — half the rows through the dedup shuffle and half
@@ -583,38 +596,8 @@ def _knn_scored_edges(emb: DataFrame, cap: int = KNN_BUCKET_CAP) -> DataFrame:
     # commutative, the fold order over i is unchanged, and so is
     # a_norm·b_norm), so every directed row carries exactly the value
     # the old plan computed for it.
-    cand = _spread(
-        sp.alias("a")
-        .join(sp.alias("b"), ["band_id", "band_hash", "sub"])
-        .filter(F.col("a.vec_id") < F.col("b.vec_id"))
-        .select(
-            F.col("a.vec_id").alias("src_id"), F.col("b.vec_id").alias("dst_id")
-        )
-        .dropDuplicates(["src_id", "dst_id"]),
-        "src_id",
-    )
-    vecs_a = emb.select(
-        F.col("vec_id").alias("src_id"),
-        F.col("embedding").alias("a_vec"),
-        _norm(F.col("embedding")).alias("a_norm"),
-    )
-    vecs_b = emb.select(
-        F.col("vec_id").alias("dst_id"),
-        F.col("embedding").alias("b_vec"),
-        _norm(F.col("embedding")).alias("b_norm"),
-    )
-    half = (
-        cand.join(vecs_a, "src_id")
-        .join(vecs_b, "dst_id")
-        .select(
-            "src_id",
-            "dst_id",
-            (
-                _dot(F.col("a_vec"), F.col("b_vec"))
-                / (F.col("a_norm") * F.col("b_norm"))
-            ).alias("sim"),
-        )
-    )
+    cand = _spread(_band_self_join(sp, [*_BAND_KEY, "sub"], "src_id", "dst_id"), "src_id")
+    half = _score_pairs(cand, "src_id", "dst_id", emb)
     return half.select(
         F.explode(
             F.array(
@@ -636,40 +619,8 @@ def _knn_scored_edges(emb: DataFrame, cap: int = KNN_BUCKET_CAP) -> DataFrame:
 def _rescored_topk(emb: DataFrame, cand: DataFrame, k: int) -> DataFrame:
     """Exact-cosine rescore of an id-only candidate edge list, keeping
     each node's top-``k`` — the shared tail of the k-NN graph family."""
-    vecs_a = emb.select(
-        F.col("vec_id").alias("src_id"),
-        F.col("embedding").alias("a_vec"),
-        _norm(F.col("embedding")).alias("a_norm"),
-    )
-    vecs_b = emb.select(
-        F.col("vec_id").alias("dst_id"),
-        F.col("embedding").alias("b_vec"),
-        _norm(F.col("embedding")).alias("b_norm"),
-    )
-    scored = (
-        _spread(cand, "src_id")
-        .join(vecs_a, "src_id")
-        .join(vecs_b, "dst_id")
-        .select(
-            "src_id",
-            "dst_id",
-            (
-                _dot(F.col("a_vec"), F.col("b_vec"))
-                / (F.col("a_norm") * F.col("b_norm"))
-            ).alias("sim"),
-        )
-    )
-    w = Window.partitionBy("src_id").orderBy(F.desc("sim"), F.asc("dst_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "src_id",
-            "dst_id",
-            F.col("rank").cast("int").alias("rank"),
-            F.floor(F.col("sim") * 1e9).cast("long").alias("sim_e9"),
-        )
-    )
+    scored = _score_pairs(_spread(cand, "src_id"), "src_id", "dst_id", emb)
+    return _topk(scored, "src_id", "dst_id", k)
 
 
 def similarity_nn_descent(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -845,13 +796,12 @@ FROM per_node GROUP BY in_degree
 
 def similarity_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
-    # EMB_DIM is pinned by the oracle's plane literals — probing the data
-    # for it (`.first()`) would cost a whole Spark job per query build
-    dim = EMB_DIM
     queries = emb.filter(F.col("vec_id") < N_QUERY_VECS)
+    # EMB_DIM is pinned by the oracle's plane literals — probing the data
+    # for it (`.first()`) would cost a whole Spark job per query build.
     # 16 planes / 4 bands of 4 bits: ~0.23 false-positive candidate rate
     # for orthogonal pairs, high recall for cosine ≥ 0.3 neighbors
-    return ann_lsh_topk(emb, queries, dim, n_planes=LSH_PLANES, n_bands=LSH_N_BANDS)
+    return ann_lsh_topk(emb, queries, EMB_DIM)
 
 
 def sql_capped_bands_chain(
@@ -1026,9 +976,6 @@ WHERE rank <= {TOP_K}
 """
 
 
-# (assigned below, after the band-hash SQL helpers are defined)
-
-
 # --------------------------------------------------------------------------
 # IVF (inverted-file) ANN
 # --------------------------------------------------------------------------
@@ -1057,7 +1004,7 @@ def _sql_dot(a: str, b: str) -> str:
 
 
 def _sql_cos(a: str, b: str) -> str:
-    """DuckDB cosine matching ``cosine()`` bit-for-bit (same fold order)."""
+    """DuckDB cosine matching ``_cos`` bit-for-bit (same fold order)."""
     return f"{_sql_dot(a, b)} / (sqrt({_sql_dot(a, a)}) * sqrt({_sql_dot(b, b)}))"
 
 
@@ -1077,18 +1024,7 @@ def _sql_plane_bit(vec_expr: str, plane: list[float]) -> str:
 def sql_band_hashes(vec_expr: str, planes: list[list[float]], n_bands: int) -> list[str]:
     """SQL twin of ``lsh_band_hashes``: one expression per band, bit-packed
     with the same h = h*2 + bit arithmetic."""
-    bits = [_sql_plane_bit(vec_expr, p) for p in planes]
-    per_band = max(1, len(planes) // n_bands)
-    out = []
-    for b in range(n_bands):
-        chunk = bits[b * per_band : (b + 1) * per_band]
-        if not chunk:
-            break
-        h = chunk[0]
-        for bit in chunk[1:]:
-            h = f"({h} * 2 + {bit})"
-        out.append(h)
-    return out
+    return _pack_bands([_sql_plane_bit(vec_expr, p) for p in planes], n_bands)
 
 
 def ann_ivf_topk(
@@ -1096,17 +1032,14 @@ def ann_ivf_topk(
     queries: DataFrame,
     k: int = TOP_K,
     stride: int = CENTROID_STRIDE,
-    n_probe: int = N_PROBE,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Approximate top-k via an IVF (inverted-file) coarse quantizer.
 
     Every ``stride``-th corpus vector serves as a centroid (a
     deterministic stand-in for offline k-means — the operator's plan is
     identical whatever trained the centroid set). Each corpus vector is
-    assigned to its nearest centroid; a query probes only its ``n_probe``
-    nearest centroids' lists, so the fine cosine pass touches ~n_probe/C
+    assigned to its nearest centroid; a query probes only its ``N_PROBE``
+    nearest centroids' lists, so the fine cosine pass touches ~N_PROBE/C
     of the corpus instead of all of it.
 
     Scale shape (100 TB): centroids are tiny → broadcast; assignment is
@@ -1121,28 +1054,16 @@ def ann_ivf_topk(
     costs n·C = n²/stride — the r6 scale-stress measured exponent 1.49
     (superlinear) at the demo default. The standard IVF sizing is
     C ≈ sqrt(n), i.e. ``stride ≈ sqrt(n)``, which balances assignment
-    (n·C) against probe width (n·n_probe/C) and restores sub-linear
+    (n·C) against probe width (n·N_PROBE/C) and restores sub-linear
     measured scaling (SCALE.md r6: 8× faster at 60k vectors, exponent
     0.40). The module default stays the oracle-pinned demo constant;
     callers at scale pass ``stride=int(sqrt(n))``."""
-    cent = corpus.filter((F.col(id_col) % stride) == 0).select(
-        F.col(id_col).alias("cid"),
-        F.col(vec_col).alias("cent_vec"),
-        _norm(F.col(vec_col)).alias("cent_norm"),
-    )
+    cent = _vecs(corpus.filter((F.col("vec_id") % stride) == 0), "cid", "cent")
     # norms once per side (same expression tree as the oracle → bit-identical)
-    csim = _dot(F.col("c_vec"), F.col("cent_vec")) / (F.col("c_norm") * F.col("cent_norm"))
     assign = (
-        _spread(
-            corpus.select(
-                F.col(id_col).alias("neighbor_id"),
-                F.col(vec_col).alias("c_vec"),
-                _norm(F.col(vec_col)).alias("c_norm"),
-            ),
-            "neighbor_id",
-        )
+        _spread(_vecs(corpus, "neighbor_id", "c"), "neighbor_id")
         .crossJoin(F.broadcast(cent))
-        .select("neighbor_id", "c_vec", "c_norm", "cid", csim.alias("csim"))
+        .select("neighbor_id", "c_vec", "c_norm", "cid", _cos("c", "cent").alias("csim"))
         .groupBy("neighbor_id")
         .agg(
             # argmax over (csim, -cid): nearest centroid, smaller cid on ties
@@ -1152,42 +1073,23 @@ def ann_ivf_topk(
         )
     )
     assign = _spread(assign, "cid")
-    qsim = _dot(F.col("q_vec"), F.col("cent_vec")) / (F.col("q_norm") * F.col("cent_norm"))
     probes = (
-        queries.select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).alias("q_vec"),
-            _norm(F.col(vec_col)).alias("q_norm"),
-        )
+        _vecs(queries, "query_id", "q")
         .crossJoin(F.broadcast(cent))
-        .select("query_id", "q_vec", "q_norm", "cid", qsim.alias("csim"))
+        .select("query_id", "q_vec", "q_norm", "cid", _cos("q", "cent").alias("csim"))
     )
     wp = Window.partitionBy("query_id").orderBy(F.desc("csim"), F.asc("cid"))
     probes = (
         probes.withColumn("prn", F.row_number().over(wp))
-        .filter(F.col("prn") <= n_probe)
+        .filter(F.col("prn") <= N_PROBE)
         .select("query_id", "q_vec", "q_norm", "cid")
     )
     scored = (
         assign.join(F.broadcast(probes), "cid")
         .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            (_dot(F.col("q_vec"), F.col("c_vec")) / (F.col("q_norm") * F.col("c_norm"))).alias("sim"),
-        )
+        .select("query_id", "neighbor_id", _cos("q", "c").alias("sim"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.col("rank").cast("int").alias("rank"),
-            F.floor(F.col("sim") * 1e9).cast("long").alias("sim_e9"),
-        )
-    )
+    return _topk(scored, "query_id", "neighbor_id", k)
 
 
 def similarity_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1199,7 +1101,7 @@ def similarity_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 def similarity_ann_ivf_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF with the PRODUCTION sizing rule executed, not just
     documented: stride = floor(sqrt(n)) so the centroid count C ≈ √n —
-    assignment (n·C) balances probe width (n·n_probe/C) and measured
+    assignment (n·C) balances probe width (n·N_PROBE/C) and measured
     scaling stays sub-linear (SCALE.md r6: exponent 0.40 vs 1.49 at
     the fixed demo stride). The corpus count is one scalar job
     (floor(sqrt(n)) is bit-identical in DuckDB, so the oracle replays

@@ -321,3 +321,211 @@ def test_lpa_communities_partition_the_graph(spark):
     )
     assert sum(r.n_members for r in out) == n_nodes
     assert len({r.community for r in out}) == len(out)
+
+
+def test_cluster_sizes_reconcile_with_components(spark):
+    from map_reduce_lite_spark.ops.dedup import (
+        dedup_cluster_sizes,
+        dedup_components,
+    )
+
+    hist = dedup_cluster_sizes(spark, SF_SMALL).collect()
+    n_nodes = dedup_components(spark, SF_SMALL).count()
+    assert sum(r["n_docs"] for r in hist) == n_nodes
+    for r in hist:
+        assert r["cluster_size"] >= 2  # components only contain paired nodes
+        assert r["n_docs"] == r["cluster_size"] * r["n_clusters"]
+
+
+def test_near_dup_pairs_staged_parity(spark, tmp_path):
+    """build_near_dup_pairs -> components/survivors consumers must equal
+    the inline forms, full multiset (the components-family staged
+    artifact, mirroring the k-NN one)."""
+    from collections import Counter
+
+    from map_reduce_lite_spark.ops.dedup import (
+        build_near_dup_pairs,
+        embedding_near_dup_pairs,
+    )
+    from map_reduce_lite_spark.ops.graph import connected_components, dedup_survivors
+    from map_reduce_lite_spark.ops.similarity import EMB_DIM
+    from map_reduce_lite_spark.relational.tables import load_table
+    from tests.conftest import SF_SMALL
+
+    emb = load_table(spark, SF_SMALL, "embeddings")
+    staged = build_near_dup_pairs(emb, str(tmp_path / "pairs"), dim=EMB_DIM)
+    inline = embedding_near_dup_pairs(emb, method="lsh", dim=EMB_DIM)
+
+    def ms(df):
+        return Counter(tuple(r) for r in df.collect())
+
+    assert ms(staged) == ms(inline)
+    assert ms(
+        connected_components(staged, src="keep_id", dst="dup_id")
+    ) == ms(connected_components(inline, src="keep_id", dst="dup_id"))
+    ids = emb.select("vec_id")
+    assert ms(dedup_survivors(staged, ids, "vec_id")) == ms(
+        dedup_survivors(inline, ids, "vec_id")
+    )
+
+
+def test_lsh_refine_matches_lsh_when_dormant(spark):
+    """When no band bucket exceeds the cap (the driver fixtures), the
+    three lsh variants are the identical plain band join — the refined
+    method must be value-identical to method="lsh"."""
+    from map_reduce_lite_spark.ops.dedup import embedding_near_dup_pairs
+    from map_reduce_lite_spark.ops.similarity import EMB_DIM
+    from map_reduce_lite_spark.relational.tables import load_table
+
+    emb = load_table(spark, SF_SMALL, "embeddings")
+    lsh = {
+        tuple(r)
+        for r in embedding_near_dup_pairs(emb, method="lsh", dim=EMB_DIM).collect()
+    }
+    refined = {
+        tuple(r)
+        for r in embedding_near_dup_pairs(
+            emb, method="lsh_refine", dim=EMB_DIM
+        ).collect()
+    }
+    assert lsh == refined and len(lsh) > 0
+
+
+def test_near_dup_pairs_staged_refined_parity(spark, tmp_path):
+    """build_near_dup_pairs(method="lsh_refine") stages the SAFETY-
+    posture pair set: staged multiset == the inline refined form."""
+    from collections import Counter
+
+    from map_reduce_lite_spark.ops.dedup import (
+        build_near_dup_pairs,
+        embedding_near_dup_pairs,
+    )
+    from map_reduce_lite_spark.ops.similarity import EMB_DIM
+    from map_reduce_lite_spark.relational.tables import load_table
+
+    emb = load_table(spark, SF_SMALL, "embeddings")
+    inline = Counter(
+        tuple(r)
+        for r in embedding_near_dup_pairs(
+            emb, method="lsh_refine", dim=EMB_DIM
+        ).collect()
+    )
+    staged = Counter(
+        tuple(r)
+        for r in build_near_dup_pairs(
+            emb, str(tmp_path / "pairs"), dim=EMB_DIM, method="lsh_refine"
+        ).collect()
+    )
+    assert inline == staged and len(inline) > 0
+
+
+def test_refined_candidates_structural_properties(spark):
+    """Structural contract of adaptive re-banding on RANDOM vectors with
+    a tiny forced cap (heavy engagement, no hand-built geometry), using
+    threshold=-1 so the output IS the candidate set:
+
+    1. refined candidates ⊆ the uncapped band-collision set (refinement
+       never invents a pair);
+    2. every pair inside a bucket at/below the cap survives verbatim
+       (the recall-preserving half of the contract — a salt would
+       violate this only in oversized buckets, refinement nowhere);
+    3. within every still-oversized refined sub-bucket, each member is
+       paired with the sub-bucket's min id (star connectivity).
+    Membership/sub-bucket structure is recomputed test-side in numpy
+    from the same seeded plane constants."""
+    import numpy as np
+
+    from map_reduce_lite_spark.ops.dedup import embedding_near_dup_pairs
+    from map_reduce_lite_spark.ops.similarity import (
+        EMB_DIM,
+        LSH_N_BANDS,
+        LSH_PLANES,
+        _hyperplanes,
+        refine_hyperplanes,
+    )
+    from map_reduce_lite_spark.relational.tables import load_table
+
+    cap = 8
+    emb = load_table(spark, SF_SMALL, "embeddings")
+    refined = {
+        (r[0], r[1])
+        for r in embedding_near_dup_pairs(
+            emb, method="lsh_refine", dim=EMB_DIM, cap=cap, threshold=-1.0
+        ).collect()
+    }
+    uncapped = {
+        (r[0], r[1])
+        for r in embedding_near_dup_pairs(
+            emb, method="lsh", dim=EMB_DIM, cap=1 << 62, threshold=-1.0
+        ).collect()
+    }
+    assert refined and refined <= uncapped  # (1)
+
+    vecs = {r["vec_id"]: np.array(r["embedding"], dtype=np.float64)
+            for r in emb.select("vec_id", "embedding").collect()}
+    planes = np.array(_hyperplanes(EMB_DIM, LSH_PLANES))
+    rplanes = np.array(refine_hyperplanes(EMB_DIM))
+
+    def hashes(v, P):
+        bits = (P @ v > 0).astype(int)
+        per = len(P) // LSH_N_BANDS
+        return [
+            int("".join(map(str, bits[b * per : (b + 1) * per])), 2)
+            for b in range(LSH_N_BANDS)
+        ]
+
+    buckets: dict = {}
+    subbuckets: dict = {}
+    for vid, v in vecs.items():
+        bh, rh = hashes(v, planes), hashes(v, rplanes)
+        for b in range(LSH_N_BANDS):
+            buckets.setdefault((b, bh[b]), []).append(vid)
+            subbuckets.setdefault((b, bh[b], rh[b]), []).append(vid)
+    engaged = False
+    for key, members in buckets.items():
+        if len(members) <= cap:  # (2) small buckets: exact all-pairs
+            for i, a in enumerate(sorted(members)):
+                for b in sorted(members)[i + 1 :]:
+                    assert (a, b) in refined, (key, a, b)
+        else:
+            engaged = True
+    assert engaged, "corpus must engage the cap for this test to bite"
+    for (b, bh, rh), members in subbuckets.items():
+        if len(buckets[(b, bh)]) > cap and len(members) > cap:  # (3) star
+            rep = min(members)
+            for m in members:
+                if m != rep:
+                    assert (rep, m) in refined, (b, bh, rh, m)
+
+
+def test_refine_star_only_probe_clean_is_empty(spark):
+    """Driver-fixture regime: no bucket oversized → the sizing probe
+    short-circuits to an empty frame (metric provably zero)."""
+    from map_reduce_lite_spark.ops.dedup import refine_star_only_ids
+    from map_reduce_lite_spark.ops.similarity import EMB_DIM
+    from map_reduce_lite_spark.relational.tables import load_table
+
+    emb = load_table(spark, SF_SMALL, "embeddings")
+    assert refine_star_only_ids(emb, dim=EMB_DIM).count() == 0
+
+
+def test_refine_star_only_prebuilt_bands_parity(spark):
+    """Passing a pre-materialized band table (the leakage_safe_split
+    sharing path) must give the same ids as building inline."""
+    from map_reduce_lite_spark.ops.dedup import refine_star_only_ids
+    from map_reduce_lite_spark.ops.similarity import EMB_DIM, lsh_band_table
+    from map_reduce_lite_spark.relational.tables import load_table
+
+    emb = load_table(spark, SF_SMALL, "embeddings")
+    # tiny cap so the machinery engages on the fixture corpus
+    inline = {
+        r.vec_id for r in refine_star_only_ids(emb, dim=EMB_DIM, cap=2).collect()
+    }
+    bands = lsh_band_table(emb, dim=EMB_DIM)
+    shared = {
+        r.vec_id
+        for r in refine_star_only_ids(
+            emb, dim=EMB_DIM, cap=2, bands=bands
+        ).collect()
+    }
+    assert inline == shared

@@ -137,6 +137,28 @@ def test_spark_rollup_empty_semantics_probe(spark):
     assert df.agg(F.count(F.lit(1))).count() == 1
 
 
+def test_embedding_band_builders_without_dim_on_empty_corpus(spark, empty_dir):
+    """Called without ``dim``, the embedding-LSH builders probe the first
+    vector's length. On an empty corpus the probe finds no row: each
+    builder returns its empty result instead of raising TypeError."""
+    from map_reduce_lite_spark.ops.dedup import (
+        embedding_near_dup_pairs,
+        refine_star_only_ids,
+    )
+    from map_reduce_lite_spark.ops.similarity import lsh_band_table
+    from map_reduce_lite_spark.relational.tables import load_table
+
+    emb = load_table(spark, empty_dir, "embeddings")
+    for method in ("lsh", "lsh_refine"):
+        pairs = embedding_near_dup_pairs(emb, method=method)
+        assert pairs.columns == ["keep_id", "dup_id", "sim_e9"], method
+        assert pairs.count() == 0, method
+    bands = lsh_band_table(emb)
+    assert bands.columns == ["bid", "band_id", "band_hash"]
+    assert bands.count() == 0
+    assert refine_star_only_ids(emb).count() == 0
+
+
 # --------------------------------------------------------------------------
 # single-row corpus (the n=1 degenerate: zero variances, short codebooks)
 # --------------------------------------------------------------------------

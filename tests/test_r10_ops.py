@@ -232,40 +232,6 @@ def test_fertility_tokenless_stratum_null_both_engines(spark, tokenless_dir):
 
 
 # --------------------------------------------------------------------------
-# staged k-NN edge list (build once, consume many)
-# --------------------------------------------------------------------------
-
-
-def test_knn_staged_edges_parity(spark, tmp_path):
-    """build_knn_edges → consumers must equal the inline registered
-    forms, full multiset, for all three family members."""
-    from map_reduce_lite_spark.ops.similarity import (
-        build_knn_edges,
-        hubness_from_edges,
-        knn_topk_edges,
-        nn_descent_from_edges,
-    )
-    from map_reduce_lite_spark.relational.tables import load_table
-    from tests.conftest import SF_SMALL
-
-    emb = load_table(spark, SF_SMALL, "embeddings")
-    staged = build_knn_edges(emb, str(tmp_path / "knn_edges"))
-
-    def ms(df):
-        from collections import Counter
-
-        return Counter(tuple(r) for r in df.collect())
-
-    assert ms(staged) == ms(knn_topk_edges(emb))
-    assert ms(nn_descent_from_edges(emb, staged)) == ms(
-        nn_descent_from_edges(emb, knn_topk_edges(emb))
-    )
-    assert ms(hubness_from_edges(emb, staged)) == ms(
-        hubness_from_edges(emb, knn_topk_edges(emb))
-    )
-
-
-# --------------------------------------------------------------------------
 # real PPM (P6) decoder
 # --------------------------------------------------------------------------
 
@@ -341,38 +307,6 @@ def test_ppm_roundtrip_matches_synthesis_rule(spark):
     assert out[7]["mean_pixel_e6"] == int((s / n) * 1e6)
     # doc 50: corrupted by the every-50th rule
     assert out[50]["ok"] is False and out[50]["width"] is None
-
-
-def test_near_dup_pairs_staged_parity(spark, tmp_path):
-    """build_near_dup_pairs -> components/survivors consumers must equal
-    the inline forms, full multiset (the components-family staged
-    artifact, mirroring the k-NN one)."""
-    from collections import Counter
-
-    from map_reduce_lite_spark.ops.dedup import (
-        build_near_dup_pairs,
-        embedding_near_dup_pairs,
-    )
-    from map_reduce_lite_spark.ops.graph import connected_components, dedup_survivors
-    from map_reduce_lite_spark.ops.similarity import EMB_DIM
-    from map_reduce_lite_spark.relational.tables import load_table
-    from tests.conftest import SF_SMALL
-
-    emb = load_table(spark, SF_SMALL, "embeddings")
-    staged = build_near_dup_pairs(emb, str(tmp_path / "pairs"), dim=EMB_DIM)
-    inline = embedding_near_dup_pairs(emb, method="lsh", dim=EMB_DIM)
-
-    def ms(df):
-        return Counter(tuple(r) for r in df.collect())
-
-    assert ms(staged) == ms(inline)
-    assert ms(
-        connected_components(staged, src="keep_id", dst="dup_id")
-    ) == ms(connected_components(inline, src="keep_id", dst="dup_id"))
-    ids = emb.select("vec_id")
-    assert ms(dedup_survivors(staged, ids, "vec_id")) == ms(
-        dedup_survivors(inline, ids, "vec_id")
-    )
 
 
 @pytest.fixture(scope="module")

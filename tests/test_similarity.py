@@ -339,3 +339,94 @@ def test_top_pc_divide_by_n_direction_invariant(spark):
     assert max(diffs.values()) <= 2, sorted(
         diffs.items(), key=lambda kv: -kv[1]
     )[:5]
+
+
+def test_nn_descent_never_degrades_the_graph(spark):
+    """NN-descent reranks a SUPERSET of each node's current candidates, so
+    at every (node, rank) the refined similarity must be ≥ the base
+    graph's — the monotone-improvement property of the algorithm."""
+    from map_reduce_lite_spark.ops.similarity import (
+        similarity_knn_graph,
+        similarity_nn_descent,
+    )
+
+    base = {
+        (r["src_id"], r["rank"]): r["sim_e9"]
+        for r in similarity_knn_graph(spark, SF_SMALL).collect()
+    }
+    refined = {
+        (r["src_id"], r["rank"]): r["sim_e9"]
+        for r in similarity_nn_descent(spark, SF_SMALL).collect()
+    }
+    assert base, "empty base graph"
+    improved = 0
+    for key, base_sim in base.items():
+        assert key in refined, f"node lost neighbors: {key}"
+        assert refined[key] >= base_sim, key
+        improved += refined[key] > base_sim
+    # the fixture's band blocking is lossy enough that NoN expansion must
+    # actually find something strictly better somewhere
+    assert improved > 0
+
+
+def test_ood_score_one_row_per_vector(spark):
+    from map_reduce_lite_spark.ops.similarity import (
+        OOD_CODEBOOK_K,
+        embedding_ood_score,
+    )
+    from map_reduce_lite_spark.relational.tables import load_table
+
+    rows = embedding_ood_score(spark, SF_SMALL).collect()
+    n_vecs = load_table(spark, SF_SMALL, "embeddings").count()
+    assert len(rows) == n_vecs
+    assert len({r["vec_id"] for r in rows}) == n_vecs
+    cents = {r["best_centroid"] for r in rows}
+    assert len(cents) <= OOD_CODEBOOK_K
+    for r in rows:
+        assert r["best_centroid"] != r["vec_id"]
+        assert r["maxsim_e9"] <= 10**9
+
+
+def test_hubness_histogram_reconciles_with_graph(spark):
+    """Node mass must equal the corpus and edge mass must equal the
+    k-NN graph's edge count — including the in-degree-0 (anti-hub) row."""
+    from map_reduce_lite_spark.ops.similarity import (
+        similarity_graph_hubness,
+        similarity_knn_graph,
+    )
+    from map_reduce_lite_spark.relational.tables import load_table
+
+    hist = similarity_graph_hubness(spark, SF_SMALL).collect()
+    n_vecs = load_table(spark, SF_SMALL, "embeddings").count()
+    n_edges = similarity_knn_graph(spark, SF_SMALL).count()
+    assert sum(r["n_nodes"] for r in hist) == n_vecs
+    assert sum(r["in_degree"] * r["n_nodes"] for r in hist) == n_edges
+
+
+def test_knn_staged_edges_parity(spark, tmp_path):
+    """build_knn_edges → consumers must equal the inline registered
+    forms, full multiset, for all three family members."""
+    from map_reduce_lite_spark.ops.similarity import (
+        build_knn_edges,
+        hubness_from_edges,
+        knn_topk_edges,
+        nn_descent_from_edges,
+    )
+    from map_reduce_lite_spark.relational.tables import load_table
+    from tests.conftest import SF_SMALL
+
+    emb = load_table(spark, SF_SMALL, "embeddings")
+    staged = build_knn_edges(emb, str(tmp_path / "knn_edges"))
+
+    def ms(df):
+        from collections import Counter
+
+        return Counter(tuple(r) for r in df.collect())
+
+    assert ms(staged) == ms(knn_topk_edges(emb))
+    assert ms(nn_descent_from_edges(emb, staged)) == ms(
+        nn_descent_from_edges(emb, knn_topk_edges(emb))
+    )
+    assert ms(hubness_from_edges(emb, staged)) == ms(
+        hubness_from_edges(emb, knn_topk_edges(emb))
+    )
